@@ -4,7 +4,11 @@ dictionaries mirroring record_transformer + template mappings)").
 
 The dictionaries are small (4–10 rows, FIXTURES.md §2) → always
 broadcast: the join is map-side, zero shuffle, and survives 100× input
-scale unchanged. Misses stay as NULLs, never drops (left join).
+scale unchanged. Misses stay as NULLs, never drops (left join). Each
+dictionary is an inline ``VALUES`` table shared with the DuckDB
+oracles; in Spark it plans as a ``LocalTableScan``, so the broadcast is
+built inside the JVM and a streaming micro-batch starts no Python
+worker for it (a ``createDataFrame(list)`` dimension would).
 """
 
 from __future__ import annotations
@@ -15,24 +19,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-#: role_dict(role, role_class, priority) — FIXTURES.md §2
-ROLE_DICT_ROWS = [
-    ("user", "human", 1),
-    ("assistant", "model", 2),
-    ("system", "control", 3),
-    ("tool", "machine", 4),
-]
-
-#: tool_dict(tool, tool_family, is_sandboxed) — FIXTURES.md §2
-TOOL_DICT_ROWS = [
-    ("search", "retrieval", True),
-    ("browser", "retrieval", False),
-    ("python", "code", True),
-    ("bash", "code", True),
-    ("none", "none", True),
-]
-
-#: the same dictionaries as SQL literals for DuckDB oracles
+#: role_dict(role, role_class, priority) and tool_dict(tool, tool_family,
+#: is_sandboxed) — FIXTURES.md §2. Inline VALUES tables, valid in both
+#: Spark SQL and DuckDB: the one definition of each dictionary, read by
+#: the pipeline and by the oracles alike.
 ROLE_DICT_SQL = (
     "(VALUES ('user','human',1),('assistant','model',2),"
     "('system','control',3),('tool','machine',4)) AS role_dict(role, role_class, priority)"
@@ -45,13 +35,11 @@ TOOL_DICT_SQL = (
 
 
 def role_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DICT_ROWS, "role string, role_class string, priority int")
+    return spark.sql(f"SELECT * FROM {ROLE_DICT_SQL}")
 
 
 def tool_dict(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        TOOL_DICT_ROWS, "tool string, tool_family string, is_sandboxed boolean"
-    )
+    return spark.sql(f"SELECT * FROM {TOOL_DICT_SQL}")
 
 
 def enrich(df: DataFrame, spark: SparkSession) -> DataFrame:

@@ -31,13 +31,17 @@ import shutil
 import time
 from dataclasses import dataclass
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..config import PipelineConfig
 from ..constants import ID_KEY, INDEX_KEY, OP_CREATE, OP_INDEX, OP_UPDATE, OP_UPSERT
 
 _MANIFEST = "_manifest.json"
+#: footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 #: chars Hive/Spark escape in partition directory names
 #: (ExternalCatalogUtils.charToEscape) — the manifest stores RAW
@@ -239,7 +243,14 @@ class SinkCatalog:
         level partition pruning (the Iceberg partition-filter analog):
         only those partitions' data files are ever listed or opened,
         which is what makes a term-bucketed index lookup touch
-        O(query terms) files instead of the whole table."""
+        O(query terms) files instead of the whole table.
+
+        Each version dir is read with an explicit schema: the Spark
+        schema stored in the footer of one of its files (every file of
+        a version comes from one write), plus ``_index string``. No
+        schema-inference job runs, and ``_index`` is always a string —
+        Spark's partition-type inference would read a numeric-looking
+        partition such as ``"2024"`` back as an int."""
         by_version: dict[str, list[str]] = {}
         wanted = set(partitions) if partitions is not None else None
         for part, versions in self._partitions_at(table, version).items():
@@ -255,7 +266,11 @@ class SinkCatalog:
             paths = [
                 os.path.join(base, f"{INDEX_KEY}={_escape_part(p)}") for p in sorted(parts)
             ]
-            df = spark.read.option("basePath", base).parquet(*paths)
+            df = (
+                spark.read.schema(_footer_schema(paths))
+                .option("basePath", base)
+                .parquet(*paths)
+            )
             out = df if out is None else out.unionByName(df, allowMissingColumns=True)
         return out
 
@@ -405,6 +420,22 @@ def _prune_markers(markers: set[str], keep: int = MARKERS_KEPT_PER_STREAM) -> li
     return sorted(kept)
 
 
+def _footer_schema(partition_dirs: list[str]) -> T.StructType:
+    """The schema of one version dir's rows: the Spark schema in the
+    footer of its first data file, plus the ``_index`` partition column
+    as a string. Reads parquet metadata only (~1 ms)."""
+    d = partition_dirs[0]
+    name = min(f for f in os.listdir(d) if f.endswith(".parquet") and f[0] not in "._")
+    meta = pq.read_metadata(os.path.join(d, name)).metadata or {}
+    if _SPARK_SCHEMA_KEY not in meta:
+        raise ValueError(
+            f"{os.path.join(d, name)} has no Spark schema in its footer "
+            f"({_SPARK_SCHEMA_KEY.decode()}); it was not written by Spark"
+        )
+    schema = T.StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+    return schema.add(INDEX_KEY, T.StringType())
+
+
 def _staged_partitions(vdir: str) -> list[str]:
     """RAW partition values staged in a version dir (dir names are
     Hive-escaped; the manifest and all `_index` comparisons use raw
@@ -490,8 +521,6 @@ def _estimate_row_bytes(df: DataFrame) -> int:
     of ``target_file_size_bytes`` (documented approximation: fixed
     widths for scalars, 64 B for strings/arrays/structs — good to the
     2-4× a file-size target needs, with zero data scans)."""
-    from pyspark.sql import types as T
-
     fixed = {T.LongType: 8, T.IntegerType: 4, T.DoubleType: 8, T.FloatType: 4,
              T.BooleanType: 1, T.TimestampType: 8, T.TimestampNTZType: 8, T.DateType: 4}
     total = 0

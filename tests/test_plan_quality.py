@@ -46,6 +46,22 @@ def test_enrichment_joins_are_broadcast(spark):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
+def test_pipeline_dimensions_are_jvm_local(spark):
+    """The dictionaries' broadcast build sides must be JVM-local
+    (``LocalTableScan``): a Python-built dimension
+    (``createDataFrame(list)`` → ``Scan ExistingRDD``) would start
+    Python workers on every streaming micro-batch to build its
+    broadcast."""
+    import re
+
+    from fluent_plugin_opensearch_spark import load_transcripts
+
+    plan = _plan(build(load_transcripts(spark, SF_SMOKE), CFG, spark))
+    assert "ExistingRDD" not in plan
+    build_sides = re.findall(r"BroadcastExchange \(\d+\)\n[\s:|]*\+- (\w+)", plan)
+    assert build_sides == ["LocalTableScan", "LocalTableScan"], plan
+
+
 def test_pipeline_has_no_python_udf_and_single_shuffle(spark):
     """The whole record pipeline (parse→enrich→route→meta) must be UDF-
     free (vectorized/JVM) and shuffle only for the final aggregation."""

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from fluent_plugin_opensearch_spark import PipelineConfig, SinkCatalog, merge_write
@@ -645,3 +646,135 @@ def test_delete_ids_snapshot_retention_flagged(spark, tmp_path):
     cat2 = SinkCatalog(str(tmp_path / "nohist"))
     merge_write(spark, _df(spark, [("x", "i1", 1)]), cat2, cfg)
     assert delete_ids(spark, ["x"], cat2, "sink") == {"requested": 1, "deleted": 1}
+
+
+def test_numeric_looking_index_reads_as_string(spark, tmp_path):
+    """A partition whose ``_index`` looks numeric (static
+    ``index_name="2024"``) must read back as a string beside a
+    ``logs-…`` partition: Spark's partition-type inference would read
+    it as an int and then fail to cast the other partition's value."""
+    cat = SinkCatalog(str(tmp_path))
+    append_to_sink(_df(spark, [("a", "2024", 1)]), cat, "sink")
+    append_to_sink(_df(spark, [("b", "logs-2024.01.01", 2)]), cat, "sink")
+    append_to_sink(_df(spark, [("c", "2024", 3)]), cat, "sink")
+    want = [("a", "2024", 1), ("b", "logs-2024.01.01", 2), ("c", "2024", 3)]
+    df = cat.read(spark, "sink")
+    assert dict(df.dtypes)["_index"] == "string"
+    assert sorted((r["_id"], r["_index"], r["v"]) for r in df.collect()) == want
+    assert cat.compact(spark, "sink") == 1  # the two-version "2024" partition
+    after = cat.read(spark, "sink")
+    assert dict(after.dtypes)["_index"] == "string"
+    assert sorted((r["_id"], r["_index"], r["v"]) for r in after.collect()) == want
+
+
+def _inferred_read(spark, cat, table):
+    """The catalog's snapshot read with Spark's own schema inference:
+    one inferring ``basePath`` read per version dir, unioned by name,
+    ``_index`` cast to string (inference types a numeric-looking
+    partition as a number)."""
+    import os
+
+    by_version: dict[str, list[str]] = {}
+    for part, versions in cat.manifest(table)["partitions"].items():
+        for v in versions:
+            by_version.setdefault(v, []).append(part)
+    out = None
+    for v, parts in sorted(by_version.items()):
+        base = os.path.join(cat.path(table), v)
+        df = (
+            spark.read.option("basePath", base)
+            .parquet(*[os.path.join(base, f"_index={p}") for p in sorted(parts)])
+            .withColumn("_index", F.col("_index").cast("string"))
+        )
+        out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+    return out
+
+
+def _batch_tables(spark, tmp_path):
+    from fluent_plugin_opensearch_spark import load_transcripts, run_batch
+
+    from .conftest import SF_SMOKE
+
+    cat = SinkCatalog(str(tmp_path / "wh"))
+    cfg = PipelineConfig(logstash_format=True, logstash_prefix="logs")
+    run_batch(spark, load_transcripts(spark, SF_SMOKE), cfg, cat)
+    return cat, ["sink", "dlq"]
+
+
+def _stream_tables(spark, tmp_path):
+    from fluent_plugin_opensearch_spark import load_transcripts
+    from fluent_plugin_opensearch_spark.streaming.stream import (
+        TRANSCRIPTS_SCHEMA,
+        start_pipeline_stream,
+    )
+
+    from .conftest import SF_SMOKE
+
+    src = str(tmp_path / "src")
+    load_transcripts(spark, SF_SMOKE).repartition(3).write.parquet(src)
+    source = spark.readStream.schema(TRANSCRIPTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src)
+    cat = SinkCatalog(str(tmp_path / "wh"))
+    cfg = PipelineConfig(logstash_format=True, logstash_prefix="logs")
+    # one micro-batch per file and no compaction: three versions per table
+    q = start_pipeline_stream(spark, source, cfg, cat, str(tmp_path / "ckpt"), compact_every=0)
+    q.awaitTermination(120)
+    return cat, ["sink", "dlq"]
+
+
+def _chunk_id_versions(spark, tmp_path):
+    """Two versions that differ in columns: the second adds chunk_id."""
+    from fluent_plugin_opensearch_spark import load_transcripts, run_batch
+
+    from .conftest import SF_SMOKE
+
+    cat = SinkCatalog(str(tmp_path / "wh"))
+    t = load_transcripts(spark, SF_SMOKE)
+    for on in (False, True):
+        cfg = PipelineConfig(logstash_format=True, logstash_prefix="logs", include_chunk_id=on)
+        run_batch(spark, t, cfg, cat)
+    return cat, ["sink"]
+
+
+def _legacy_tables(spark, tmp_path):
+    """Pre-manifest layout with numeric-looking partition values."""
+    _df(spark, [("a", "2024", 1), ("b", "2025", 2), ("c", "2024", None)]).write.partitionBy(
+        "_index"
+    ).parquet(str(tmp_path / "sink"))
+    return SinkCatalog(str(tmp_path)), ["sink"]
+
+
+@pytest.mark.parametrize(
+    "make", [_batch_tables, _stream_tables, _chunk_id_versions, _legacy_tables],
+    ids=["run_batch", "stream", "chunk_id_versions", "legacy_layout"],
+)
+def test_read_schema_matches_spark_inference(spark, tmp_path, make):
+    """``SinkCatalog.read`` takes each version's schema from a parquet
+    footer instead of a schema-inference job; the schema and rows must
+    equal Spark's own inferring read of the same directories."""
+    cat, tables = make(spark, tmp_path)
+    for table in tables:
+        got = cat.read(spark, table)
+        want = _inferred_read(spark, cat, table)
+        assert got.schema == want.schema, table
+        assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr), table
+    if make is _chunk_id_versions:
+        assert "chunk_id" in cat.read(spark, "sink").columns
+
+
+def test_read_raises_without_spark_footer_schema(spark, tmp_path):
+    """A version file that Spark did not write (no row-schema key in
+    its footer) cannot be read with a known schema: read raises."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    cat = SinkCatalog(str(tmp_path))
+    version, vdir = cat.stage("sink")
+    os.makedirs(os.path.join(vdir, "_index=i1"))
+    pq.write_table(
+        pa.table({"_id": ["a"], "v": [1]}), os.path.join(vdir, "_index=i1", "part-0.parquet")
+    )
+    cat.commit("sink", version, ["i1"], replace=False)
+    with pytest.raises(ValueError, match="no Spark schema in its footer"):
+        cat.read(spark, "sink")
